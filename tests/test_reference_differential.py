@@ -1957,9 +1957,12 @@ def test_business_days_per_month_matches_reference(spark):
     """compute_business_days_per_month (`stage1/helper_functions.py:
     1783-1812`) counts pd.bdate_range(freq='B') days — PLAIN weekdays,
     no holiday calendar — per month. Ranges chosen to hit partial
-    months, weekend endpoints, a leap February, and a year boundary."""
+    months, weekend endpoints, a leap February, and a year boundary,
+    each as the 1-row (lo, hi) frame r10 feeds it."""
+    from pyspark.sql import functions as F
+
     from trace_data_pipeline_spark.functions.nyse_calendar import (
-        business_days_per_month,
+        business_days_per_month_from_bounds,
     )
 
     ref_fn = _ref_fns(_SRC_S1, ("compute_business_days_per_month",))[
@@ -1972,9 +1975,13 @@ def test_business_days_per_month_matches_reference(spark):
         ("2002-07-01", "2003-06-30"),
     ):
         ref = ref_fn(start, end)
+        bounds = spark.range(1).select(
+            F.lit(start).cast("date").alias("lo"),
+            F.lit(end).cast("date").alias("hi"),
+        )
         got = {
             r.year_month: r.business_days
-            for r in business_days_per_month(spark, start, end).collect()
+            for r in business_days_per_month_from_bounds(bounds).collect()
         }
         want = dict(zip(ref["year_month"], ref["business_days"]))
         assert got == want, (start, end, got, want)

@@ -85,6 +85,33 @@ def test_parameters_table_panels():
     assert r"\texttt{factor\_set} & \texttt{10,100,1000} \\" in tex
 
 
+def test_audit_report_table1_shows_p1_settings(tmp_path, monkeypatch):
+    """Table 1 prints the switchboard the p1 stage-0 entry runs, not the
+    Stage0Settings defaults, whose price screens no entry applies. The
+    report builds Table 1 before any distributed work, so the stub
+    stops it there and no Spark session is needed."""
+    from dataclasses import asdict
+
+    from trace_data_pipeline_spark.plans.settings import (
+        P1_SETTINGS,
+        Stage0Settings,
+    )
+    from trace_data_pipeline_spark.reports import write_audit_report
+
+    class Captured(Exception):
+        pass
+
+    def capture(panels, *args, **kwargs):
+        raise Captured(panels)
+
+    monkeypatch.setattr(latex, "parameters_table", capture)
+    with pytest.raises(Captured) as got:
+        write_audit_report(None, "unused", str(tmp_path))
+    shown = {k: v for pairs in got.value.args[0].values() for k, v in pairs}
+    assert shown == asdict(P1_SETTINGS)
+    assert shown != asdict(Stage0Settings())
+
+
 def test_data_report_document_reproducible():
     t = latex.removal_table(
         [

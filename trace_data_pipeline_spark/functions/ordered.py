@@ -28,14 +28,6 @@ def _as_col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
-def order_key(*order_cols: Column | str) -> Column:
-    """A lexicographically ordered struct usable as a min_by/max_by key.
-
-    NOTE: struct keys force SortAggregate — prefer ``packed_order_key``
-    on hot paths when the components are non-negative integers."""
-    return F.struct(*[_as_col(c) for c in order_cols])
-
-
 def packed_order_key(*specs: tuple[Column | str, int]) -> Column:
     """Pack integer tiebreak components into one ``decimal(38,0)`` whose
     numeric order equals the components' lexicographic order — a

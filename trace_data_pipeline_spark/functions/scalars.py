@@ -134,11 +134,3 @@ def round_ratio_half_up_wide(
     d = denom.cast("decimal(20,0)")
     q = F.floor((n * two_s + d) / (d * F.lit(2).cast("decimal(1,0)")))
     return q.cast("double") / F.lit(float(s))
-
-
-def years_between(later: Column | str, earlier: Column | str) -> Column:
-    """Day difference / 365.25, the reference's tenor convention
-    (`stage1/stage1_pipeline.py:374-375`)."""
-    a = F.col(later) if isinstance(later, str) else later
-    b = F.col(earlier) if isinstance(earlier, str) else earlier
-    return F.datediff(a, b) / F.lit(365.25)

@@ -26,7 +26,18 @@ from pyspark.sql import functions as F
 from trace_data_pipeline_spark.operators.bounceback import bounce_back_filter
 from trace_data_pipeline_spark.operators.decimal_shift import decimal_shift_corrector
 from trace_data_pipeline_spark.plans.catalog import register
+from trace_data_pipeline_spark.plans.settings import (
+    P0_SETTINGS,
+    P1_SETTINGS,
+    Stage0Settings,
+    build_stage0,
+)
 from trace_data_pipeline_spark.sources import load_table
+
+# The kernels' column contract on the synthetic events: user_id stands
+# in for cusip_id, d for the trade date, p for the price, and
+# (ts, event_id) is the trade order.
+_ID, _DATE, _PRICE, _ORDER = "user_id", "d", "p", ("ts", "event_id")
 
 _W1_CTE = r"""
 WITH base AS (
@@ -268,6 +279,49 @@ def _corrupted_events(spark, sf_dir):
     )
 
 
+def _decimal_shift(df, mode, window=Stage0Settings.decimal_shift_window):
+    """W1 over a frame in the column contract."""
+    return decimal_shift_corrector(
+        df, _ID, _DATE, _PRICE, _ORDER, window=window, mode=mode
+    )
+
+
+def _bounce_back(df, mode, threshold_abs=Stage0Settings.bounce_threshold_abs):
+    """W2 over a frame in the column contract; the output keeps the
+    input's column order."""
+    return bounce_back_filter(
+        df, _ID, _PRICE, _ORDER, threshold_abs=threshold_abs, mode=mode
+    )
+
+
+def _flag_chain(spark, sf_dir):
+    """The flag-mode W1 → W2 → W3 chain (the reference's
+    output_type='uncleaned' re-run, `create_daily_enhanced_trace.py:
+    2402-2780`): each stage flags the previous stage's survivors.
+    Returns the three flagged frames (f1, f2, f3).
+
+    The two grouped-map kernel frames f1 and f2 are persisted because
+    each caller forms a DIAMOND: every frame feeds both the next stage
+    and the caller's own consumer of it (r2's removal count, the
+    report's affected-set filter), and without the cache Spark would
+    run the Python kernels once per consumer (measured ~7 s → ~3 s at
+    sf0.1 on r2)."""
+    from trace_data_pipeline_spark.operators.caching import tracked_persist
+    from trace_data_pipeline_spark.operators.windows import (
+        initial_price_error_filter,
+    )
+
+    f1 = tracked_persist(_decimal_shift(_corrupted_events(spark, sf_dir), "flag"))
+    s1 = f1.filter(F.col("dec_shift_flag") == 0)
+    f2 = tracked_persist(
+        _bounce_back(s1.select("user_id", "d", "ts", "event_id", "p"), "flag")
+    )
+    f3 = initial_price_error_filter(
+        f2.filter(F.col("filtered_error") == 0), _PRICE, [_ID], _ORDER, mode="flag"
+    )
+    return f1, f2, f3
+
+
 @register("w1_decimal_shift", oracle=_W1_ORACLE)
 def w1_decimal_shift(spark, sf_dir):
     """W1 decimal-shift corrector end-to-end on synthetically corrupted
@@ -275,13 +329,7 @@ def w1_decimal_shift(spark, sf_dir):
     slice), factor testing + five acceptance gates as column algebra.
     Value-hash checked against a full list-SQL oracle — bit-exact, no
     rounding."""
-    out = decimal_shift_corrector(
-        _corrupted_events(spark, sf_dir),
-        id_col="user_id",
-        date_col="d",
-        price_col="p",
-        order_cols=("ts", "event_id"),
-    )
+    out = _decimal_shift(_corrupted_events(spark, sf_dir), "flag")
     return out.select(
         "event_id",
         F.col("dec_shift_flag").cast("int").alias("dec_shift_flag"),
@@ -297,12 +345,7 @@ def w2_bounce_back(spark, sf_dir):
     cooldown) as an applyInPandas grouped map. Oracle = the same scan
     as a recursive CTE (_W2_MACHINE) — bit-exact, no rounding; plus
     golden tests."""
-    out = bounce_back_filter(
-        _corrupted_events(spark, sf_dir),
-        id_col="user_id",
-        price_col="p",
-        order_cols=("ts", "event_id"),
-    )
+    out = _bounce_back(_corrupted_events(spark, sf_dir), "flag")
     return out.select(
         "event_id", F.col("filtered_error").cast("int").alias("filtered_error")
     )
@@ -370,24 +413,38 @@ FROM ranked2 GROUP BY 1, 2
 )
 
 
-def _daily_panel(cleaned, price_col):
-    """A1-style daily aggregation over a cleaned trade frame, with the
-    exact fixed-point mean discipline (corrected prices have ≤3
-    decimals, so mills are integers)."""
+def _daily_panel(cleaned):
+    """A1-style daily aggregation over a cleaned trade frame in the
+    column contract, with the exact fixed-point mean discipline
+    (corrected prices have ≤3 decimals, so mills are integers)."""
     from trace_data_pipeline_spark.functions.ordered import first_by, last_by, ts_seq_key
     from trace_data_pipeline_spark.functions.scalars import round_ratio_half_up
 
-    cp = F.col(price_col)
+    cp = F.col("cp")  # the corrected price, named as in the oracles
     mills = F.round(cp * 1000, 0).cast("long")
-    return cleaned.groupBy("user_id", "d").agg(
-        F.count(F.lit(1)).alias("n_trades"),
-        first_by(cp, ts_seq_key("ts", "event_id")).alias("prc_first"),
-        last_by(cp, ts_seq_key("ts", "event_id")).alias("prc_last"),
-        F.max(cp).alias("prc_hi"),
-        F.min(cp).alias("prc_lo"),
-        round_ratio_half_up(F.sum(mills), F.count(F.lit(1)) * 1000, 4).alias(
-            "prc_ew"
-        ),
+    return (
+        cleaned.select(_ID, _DATE, *_ORDER, F.col(_PRICE).alias("cp"))
+        .groupBy(_ID, _DATE)
+        .agg(
+            F.count(F.lit(1)).alias("n_trades"),
+            first_by(cp, ts_seq_key(*_ORDER)).alias("prc_first"),
+            last_by(cp, ts_seq_key(*_ORDER)).alias("prc_last"),
+            F.max(cp).alias("prc_hi"),
+            F.min(cp).alias("prc_lo"),
+            round_ratio_half_up(F.sum(mills), F.count(F.lit(1)) * 1000, 4).alias(
+                "prc_ew"
+            ),
+        )
+        .select(
+            _ID,
+            F.date_format(_DATE, "yyyy-MM-dd").alias("d"),
+            "n_trades",
+            "prc_first",
+            "prc_last",
+            "prc_hi",
+            "prc_lo",
+            "prc_ew",
+        )
     )
 
 
@@ -461,50 +518,15 @@ def r2_error_checks(spark, sf_dir):
     with cross joins into the removal table with exact half-up
     fractions — no per-stage driver actions, no recounting scans.
 
-    Execution shape: the two grouped-map kernel frames (f1, f2) are
-    persisted because the audit creates a DIAMOND — each frame feeds
-    both the next stage's input and its own removal count; without the
-    cache Spark's two consumers would run the Python kernels twice
-    (measured ~7 s → ~3 s at sf0.1). The per-stage counts come from
-    each stage's own 1-row aggregate cross-joined together, never from
-    an events-sized join on event_id."""
+    The chain's kernel frames are persisted (see _flag_chain). The
+    per-stage counts come from each stage's own 1-row aggregate
+    cross-joined together, never from an events-sized join on
+    event_id."""
     from trace_data_pipeline_spark.functions.scalars import (
         round_ratio_half_up,
     )
-    from trace_data_pipeline_spark.operators.caching import tracked_persist
-    from trace_data_pipeline_spark.operators.windows import (
-        initial_price_error_filter,
-    )
 
-    src = _corrupted_events(spark, sf_dir)
-    f1 = tracked_persist(
-        decimal_shift_corrector(
-            src,
-            id_col="user_id",
-            date_col="d",
-            price_col="p",
-            order_cols=("ts", "event_id"),
-            mode="flag",
-        )
-    )
-    s1 = f1.filter(F.col("dec_shift_flag") == 0)
-    f2 = tracked_persist(
-        bounce_back_filter(
-            s1.select("user_id", "d", "ts", "event_id", "p"),
-            id_col="user_id",
-            price_col="p",
-            order_cols=("ts", "event_id"),
-            mode="flag",
-        )
-    )
-    s2 = f2.filter(F.col("filtered_error") == 0)
-    f3 = initial_price_error_filter(
-        s2,
-        "p",
-        ["user_id"],
-        ["ts", "event_id"],
-        mode="flag",
-    )
+    f1, f2, f3 = _flag_chain(spark, sf_dir)
     cnt = lambda p: F.sum(F.when(p, 1).otherwise(0))  # noqa: E731
     a1 = f1.agg(
         F.count(F.lit(1)).alias("c0"),
@@ -542,25 +564,7 @@ def p0_stage0_panel(spark, sf_dir):
     the operators compose without materialization boundaries. The
     oracle replays the whole chain (anchor CTEs + gates + aggregation)
     and the comparison is exact."""
-    cleaned = decimal_shift_corrector(
-        _corrupted_events(spark, sf_dir),
-        id_col="user_id",
-        date_col="d",
-        price_col="p",
-        order_cols=("ts", "event_id"),
-        mode="clean",
-    ).select("user_id", "d", "ts", "event_id", F.col("p").alias("cp"))
-    panel = _daily_panel(cleaned, "cp")
-    return panel.select(
-        "user_id",
-        F.date_format("d", "yyyy-MM-dd").alias("d"),
-        "n_trades",
-        "prc_first",
-        "prc_last",
-        "prc_hi",
-        "prc_lo",
-        "prc_ew",
-    )
+    return _daily_panel(build_stage0(spark, sf_dir, P0_SETTINGS))
 
 
 @register("p1_stage0_full", oracle=_P1_ORACLE)
@@ -569,32 +573,7 @@ def p1_stage0_full(spark, sf_dir):
     (W2): corrupt → decimal-shift clean → bounce-back clean → daily
     panel — end-to-end value-hash-checked (W1 list-SQL + W2 recursive
     CTE + panel aggregation composed into one oracle)."""
-    cleaned = decimal_shift_corrector(
-        _corrupted_events(spark, sf_dir),
-        id_col="user_id",
-        date_col="d",
-        price_col="p",
-        order_cols=("ts", "event_id"),
-        mode="clean",
-    )
-    bounced = bounce_back_filter(
-        cleaned.select("user_id", "d", "ts", "event_id", "p"),
-        id_col="user_id",
-        price_col="p",
-        order_cols=("ts", "event_id"),
-        mode="clean",
-    ).select("user_id", "d", "ts", "event_id", F.col("p").alias("cp"))
-    panel = _daily_panel(bounced, "cp")
-    return panel.select(
-        "user_id",
-        F.date_format("d", "yyyy-MM-dd").alias("d"),
-        "n_trades",
-        "prc_first",
-        "prc_last",
-        "prc_hi",
-        "prc_lo",
-        "prc_ew",
-    )
+    return _daily_panel(build_stage0(spark, sf_dir, P1_SETTINGS))
 
 
 @register(
@@ -625,14 +604,7 @@ def r4_flagged_series(spark, sf_dir):
     set is flag-holders only, so the semi-join's build side is
     collision-sized and broadcasts; the flag pass runs ONCE (flag mode
     keeps every row, so no diamond)."""
-    f1 = decimal_shift_corrector(
-        _corrupted_events(spark, sf_dir),
-        id_col="user_id",
-        date_col="d",
-        price_col="p",
-        order_cols=("ts", "event_id"),
-        mode="flag",
-    )
+    f1 = _decimal_shift(_corrupted_events(spark, sf_dir), "flag")
     affected = (
         f1.filter(F.col("dec_shift_flag") == 1).select("user_id").distinct()
     )
@@ -670,16 +642,11 @@ def flagged_series_frames(
     broadcast build side — collision-sized by construction) with the
     uniform schema (event_id, user_id, d, p_before, p_after, flag).
     Report-layer frames, deliberately NOT catalog entries: r4 is the
-    oracle-backed representative; these reuse its proven flag-mode
-    operators on the proven r2 chain order. The kernel frames are
-    tracked-persisted for the same diamond reason r2 caches its f1/f2:
-    each feeds both its affected-set filter and the semi-join's probe
-    side (and f2 additionally the init_price stage), so without the
-    cache the grouped-map kernels would run once per consumer."""
+    oracle-backed representative; these are r2's own chain
+    (_flag_chain), whose persisted f1/f2 they share. f3 is persisted
+    here for the same diamond: it feeds both its affected-set filter
+    and the semi-join's probe side."""
     from trace_data_pipeline_spark.operators.caching import tracked_persist
-    from trace_data_pipeline_spark.operators.windows import (
-        initial_price_error_filter,
-    )
 
     def _affected_only(frame, flag_col):
         affected = (
@@ -706,40 +673,14 @@ def flagged_series_frames(
             F.col("dec_shift_flag").alias("flag"),
         )
     if need_chain:
-        f1 = decimal_shift_corrector(
-            _corrupted_events(spark, sf_dir),
-            id_col="user_id",
-            date_col="d",
-            price_col="p",
-            order_cols=("ts", "event_id"),
-            mode="flag",
-        )
-        s1 = f1.filter(F.col("dec_shift_flag") == 0)
-        f2 = tracked_persist(
-            bounce_back_filter(
-                s1.select("user_id", "d", "ts", "event_id", "p"),
-                id_col="user_id",
-                price_col="p",
-                order_cols=("ts", "event_id"),
-                mode="flag",
-            )
-        )
+        _, f2, f3 = _flag_chain(spark, sf_dir)
         if "bounce_back" in error_types:
             out["bounce_back"] = _affected_only(
                 f2.withColumn("p_after", F.col("p")), "filtered_error"
             )
         if "init_price" in error_types:
-            s2 = f2.filter(F.col("filtered_error") == 0)
-            f3 = tracked_persist(
-                initial_price_error_filter(
-                    s2,
-                    "p",
-                    ["user_id"],
-                    ["ts", "event_id"],
-                    mode="flag",
-                )
-            )
             out["init_price"] = _affected_only(
-                f3.withColumn("p_after", F.col("p")), "initial_error"
+                tracked_persist(f3).withColumn("p_after", F.col("p")),
+                "initial_error",
             )
     return {t: out[t] for t in error_types}

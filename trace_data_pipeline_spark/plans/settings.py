@@ -16,8 +16,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from trace_data_pipeline_spark.operators.bounceback import bounce_back_filter
-from trace_data_pipeline_spark.operators.decimal_shift import decimal_shift_corrector
 from trace_data_pipeline_spark.operators.filters import AuditLedger, filter_with_log
 
 
@@ -38,6 +36,15 @@ class Stage0Settings:
     min_trades_per_day: int | None = None
 
 
+# The switchboards of the catalog's stage-0 entries: p0 runs W1 alone,
+# p1 runs W1 then W2. Neither applies the price screens, which their
+# DuckDB oracles do not replay.
+P0_SETTINGS = Stage0Settings(
+    drop_nonpositive_price=False, price_max=None, apply_bounce_back=False
+)
+P1_SETTINGS = Stage0Settings(drop_nonpositive_price=False, price_max=None)
+
+
 def build_stage0(
     spark: SparkSession,
     sf_dir: str,
@@ -46,7 +53,11 @@ def build_stage0(
 ) -> DataFrame:
     """Assemble the stage-0 cleaning chain per the switchboard; returns
     the cleaned trade-level frame (user_id, d, ts, event_id, p)."""
-    from trace_data_pipeline_spark.plans.errorcorrection import _corrupted_events
+    from trace_data_pipeline_spark.plans.errorcorrection import (
+        _bounce_back,
+        _corrupted_events,
+        _decimal_shift,
+    )
 
     df = _corrupted_events(spark, sf_dir)
     if settings.drop_nonpositive_price:
@@ -56,23 +67,12 @@ def build_stage0(
             df, F.col("p") <= settings.price_max, "price_cap", ledger
         )
     if settings.apply_decimal_shift:
-        df = decimal_shift_corrector(
-            df,
-            id_col="user_id",
-            date_col="d",
-            price_col="p",
-            order_cols=("ts", "event_id"),
-            window=settings.decimal_shift_window,
-            mode="clean",
+        df = _decimal_shift(
+            df, "clean", window=settings.decimal_shift_window
         ).select("user_id", "d", "ts", "event_id", "p")
     if settings.apply_bounce_back:
-        df = bounce_back_filter(
-            df,
-            id_col="user_id",
-            price_col="p",
-            order_cols=("ts", "event_id"),
-            threshold_abs=settings.bounce_threshold_abs,
-            mode="clean",
+        df = _bounce_back(
+            df, "clean", threshold_abs=settings.bounce_threshold_abs
         )
     if settings.min_trades_per_day is not None:
         from pyspark.sql import Window

@@ -218,7 +218,7 @@ def write_audit_report(
     `pages_{bb,ie}`.
     """
     from trace_data_pipeline_spark.plans import get_catalog
-    from trace_data_pipeline_spark.plans.settings import Stage0Settings
+    from trace_data_pipeline_spark.plans.settings import P1_SETTINGS
 
     suffix = {"decimal_shift": "ds", "bounce_back": "bb", "init_price": "ie"}
     unknown = set(figure_error_types) - set(suffix)
@@ -228,11 +228,9 @@ def write_audit_report(
     catalog = get_catalog()
     os.makedirs(out_dir, exist_ok=True)
 
-    # Table 1: the configured switchboard (the reference's
-    # make_parameters_table panels, from the live Stage0Settings
-    # defaults — a caller running a customized pipeline would pass its
-    # own settings through here)
-    s = Stage0Settings()
+    # Table 1: the switchboard the p1 stage-0 entry runs (the
+    # reference's make_parameters_table panels)
+    s = P1_SETTINGS
     tables = [
         latex.parameters_table(
             {

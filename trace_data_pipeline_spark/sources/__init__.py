@@ -1,3 +1,3 @@
-from trace_data_pipeline_spark.sources.registry import TABLES, load_table, load_all
+from trace_data_pipeline_spark.sources.registry import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "load_all"]
+__all__ = ["TABLES", "load_table"]

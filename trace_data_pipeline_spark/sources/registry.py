@@ -182,7 +182,3 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}

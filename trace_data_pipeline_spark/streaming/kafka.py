@@ -44,14 +44,6 @@ def json_event_value(df: DataFrame, cols: list[str] | None = None):
     )
 
 
-def encode_json_events(df: DataFrame) -> DataFrame:
-    """Typed event rows → the Kafka message shape (one binary `value`
-    column of JSON) — the producer half of the wire, used by tests and
-    by the file-backed replay entry to stage a Kafka-faithful stream
-    without a broker."""
-    return df.select(json_event_value(df).alias("value"))
-
-
 def decode_json_events(raw: DataFrame, schema: str = EVENTS_WIRE_SCHEMA) -> DataFrame:
     """Kafka-shaped frame (binary `value` column) → typed event rows.
     Works identically on streaming and batch frames — malformed
