@@ -301,11 +301,12 @@ def _flag_chain(spark, sf_dir):
     Returns the three flagged frames (f1, f2, f3).
 
     The two grouped-map kernel frames f1 and f2 are persisted because
-    each caller forms a DIAMOND: every frame feeds both the next stage
-    and the caller's own consumer of it (r2's removal count, the
-    report's affected-set filter), and without the cache Spark would
-    run the Python kernels once per consumer (measured ~7 s → ~3 s at
-    sf0.1 on r2)."""
+    they form DIAMONDS: f1 feeds W2 and r2's removal count, f2 feeds W3
+    and both r2's count and the report's affected-set filter. Without
+    the cache Spark would run the Python kernels once per consumer
+    (measured ~7 s → ~3 s at sf0.1 on r2). The report never reads f1,
+    but in an audit report r2 runs first, and Spark's cache manager
+    serves both f1 and f2 from r2's cached frames."""
     from trace_data_pipeline_spark.operators.caching import tracked_persist
     from trace_data_pipeline_spark.operators.windows import (
         initial_price_error_filter,
