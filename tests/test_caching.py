@@ -100,28 +100,6 @@ def sf_dir():
     return TEST_SF_DIR
 
 
-def test_scoped_caches_releases_only_inner_frames(spark):
-    """scoped_caches must release exactly the frames tracked inside its
-    body — outer tracked frames (owned by concurrent work in the same
-    session) keep their storage."""
-    from trace_data_pipeline_spark.operators.caching import (
-        release_caches,
-        scoped_caches,
-        tracked_persist,
-    )
-
-    outer = tracked_persist(spark.range(10).selectExpr("id * 2 AS v"))
-    outer.count()
-    with scoped_caches():
-        inner = tracked_persist(spark.range(5).selectExpr("id + 1 AS w"))
-        inner.count()
-        assert inner.storageLevel.useMemory
-    assert not inner.storageLevel.useMemory  # released by scope exit
-    assert outer.storageLevel.useMemory  # untouched by the scope
-    release_caches()
-    assert not outer.storageLevel.useMemory
-
-
 def test_cc_raises_on_path_beyond_jump_reach(spark):
     """Adversarial topology at the d18 CALL SITE's max_iter=8 (r4
     verdict item 5): alternating large/small-star needs

@@ -7,7 +7,9 @@ the CORRECTNESS_r*.json / PARITY.json artifacts — run
 
 from __future__ import annotations
 
+import ast
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -50,3 +52,49 @@ def test_parity_stamps_postdate_entry_commits():
         "parity stamps older than the newest commit touching the "
         f"entry's modules — re-prove after committing: {stale}"
     )
+
+
+_DOC_REF = re.compile(r"`([\w./-]+\.py)::([\w/]+)`")
+
+
+def _top_level_names(path: str) -> set[str]:
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    names = set()
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, ast.Assign):
+            names |= {t.id for t in node.targets if isinstance(t, ast.Name)}
+        elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+            names.add(node.target.id)
+    return names
+
+
+def test_docs_name_only_code_that_exists():
+    """Every backticked `<path>.py::<name>` in COVERAGE.md, SCALE.md and
+    README.md names an existing file and a top-level def or assignment
+    in it, so a deleted helper cannot leave a row pointing at nothing.
+    A path may be cut from the left (`filters.py`, `plans/stage1.py`)
+    or start at `tdps/` for the package; `a/b` names two defs."""
+    py_files = []
+    for d, dirs, files in os.walk(REPO):
+        dirs[:] = [x for x in dirs if not x.startswith(".")]
+        py_files += [
+            os.path.relpath(os.path.join(d, f), REPO)
+            for f in files
+            if f.endswith(".py")
+        ]
+    misses = []
+    for doc in ("COVERAGE.md", "SCALE.md", "README.md"):
+        with open(os.path.join(REPO, doc), encoding="utf-8") as fh:
+            refs = _DOC_REF.findall(fh.read())
+        for path, names in refs:
+            full = re.sub(r"^tdps/", "trace_data_pipeline_spark/", path)
+            defined = set()
+            for f in py_files:
+                if f == full or f.endswith("/" + full):
+                    defined |= _top_level_names(os.path.join(REPO, f))
+            if not all(n in defined for n in names.split("/")):
+                misses.append(f"{doc}: {path}::{names}")
+    assert not misses, f"docs name code that does not exist: {misses}"

@@ -110,6 +110,22 @@ def test_scan_pushdown_reaches_parquet(spark):
     assert "l_orderkey" in read and "l_extendedprice" in read
     assert "l_comment" not in read and "l_quantity" not in read
 
+
+def test_load_table_sees_part_file_rewritten_in_place(spark, tmp_path):
+    """Rewriting a part file in place inside a directory table changes
+    neither the directory's mtime nor its size; load_table's
+    per-session frame cache must still miss and read the new rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    part = tmp_path / "region.parquet" / "part-00000.parquet"
+    part.parent.mkdir()
+    pq.write_table(pa.table({"r_regionkey": list(range(100))}), part)
+    assert load_table(spark, str(tmp_path), "region").count() == 100
+    pq.write_table(pa.table({"r_regionkey": list(range(1000))}), part)
+    assert load_table(spark, str(tmp_path), "region").count() == 1000
+
+
 # ---- S1/S2 live JDBC branch --------------------------------------------
 
 

@@ -29,19 +29,9 @@ ALLOWED = {
     "hms_to_seconds_checked": "§2.7 twin of the reference's _hms_to_seconds",
     "nyse_sessions": "driver-side session list, the reference for nyse_sessions_df",
     "daily_price_panel": "A1/A2 operator the reference differential checks",
-    "salted_join": "skew mitigation operator (COVERAGE skew row)",
-    "resize_images": "COVERAGE multimodal plumbing row",
-    "sample_frames": "COVERAGE multimodal plumbing row",
-    "streaming_sessionize": "COVERAGE streaming sessionization row",
-    "incremental_dedup_sink": "COVERAGE streaming corpus-ingest row",
-    "idempotent_parquet_writer": "COVERAGE streaming exactly-once sink row",
-    "kafka_json_stream": "config-only Kafka transport (needs the connector jar)",
     "register_views": "end-user SQL surface (COVERAGE §2.7b)",
     "legend_bbox": "legend geometry the renderer owns, read by tests",
-    **dict.fromkeys(
-        ("write_bucketed", "bucketed_join", "exchanges_in_plan"),
-        "bucketing trio: ROADMAP direction 2 gives it a caller or deletes it",
-    ),
+    "encode_jpeg_color": "fixture encoder the colour-JPEG decode tests build inputs with",
 }
 
 

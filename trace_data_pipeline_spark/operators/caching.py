@@ -19,12 +19,9 @@ lifetime. The registry is the lifecycle owner; `release_caches()` pops
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
-_LOCAL = threading.local()
 _RELEASE_HOOKS: list = []
 
 
@@ -39,52 +36,10 @@ def register_release_hook(fn) -> None:
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:
-    """`df.persist()` + registration for later release: into the
-    CURRENT THREAD's innermost `scoped_caches` if one is active (the
-    scope owns and releases those frames), else the session-global
-    registry drained by `release_caches()`."""
+    """`df.persist()` + registration for the next `release_caches()`."""
     df = df.persist()
-    scopes = getattr(_LOCAL, "scopes", None)
-    if scopes:
-        scopes[-1].append(df)
-    else:
-        _TRACKED.append(df)
+    _TRACKED.append(df)
     return df
-
-
-class scoped_caches:
-    """Context manager releasing ONLY the frames tracked inside its
-    body ON THIS THREAD — for callers embedded in a larger live session
-    (a streaming foreachBatch sink, a library routine) where the global
-    `release_caches()` sweep would also free checkpoint blocks owned by
-    unrelated in-flight work (those have truncated lineage and cannot
-    be recomputed — see release_caches' contract).
-
-    Thread discipline: the scope is a THREAD-LOCAL collector, so two
-    concurrent sinks on one session (each foreachBatch runs on its own
-    thread) cannot release each other's frames, and tracked_persist
-    calls from other threads keep flowing to the global registry — a
-    global length-mark scheme would free whatever any thread tracked
-    during the window. Scoped frames never enter the global registry,
-    so release_caches' tracked drain cannot double-release them (its
-    final whole-session RDD sweep remains global by contract)."""
-
-    def __enter__(self):
-        if not hasattr(_LOCAL, "scopes"):
-            _LOCAL.scopes = []
-        self._frames: list[DataFrame] = []
-        _LOCAL.scopes.append(self._frames)
-        return self
-
-    def __exit__(self, *exc):
-        _LOCAL.scopes.pop()
-        for df in self._frames:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        self._frames.clear()
-        return False
 
 
 def release_caches() -> int:

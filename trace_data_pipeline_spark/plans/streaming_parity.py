@@ -51,8 +51,10 @@ import threading
 
 from pyspark.sql import functions as F
 
+from trace_data_pipeline_spark.operators.caching import register_release_hook
 from trace_data_pipeline_spark.plans.catalog import register
 from trace_data_pipeline_spark.sources import load_table
+from trace_data_pipeline_spark.sources.registry import table_fingerprint
 
 _A1S_ORACLE = """
 SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
@@ -72,11 +74,11 @@ N_DROPS = 4
 # keyspace (<=50k keys): warm sf0.1 replays measured ~13-18 s at 32
 # partitions, ~8.5 s at 8 (r10), ~3.0 s at 2 with byte-identical
 # emissions (r11 re-measure, same box). A 100 TB deployment sizes
-# this to its cluster width instead — see _run_replay.
+# this to its cluster width instead — see _state_session.
 STATE_PARTITIONS = 2
 
-# (applicationId, abs sf_dir, input fingerprint) -> staging parquet
-# dir of emissions.
+# (applicationId, abs sf_dir, events fingerprint) -> output parquet
+# dir, one memo per replay (a1s emissions, s5 sink).
 # The replay is deterministic for a given input dir (chronological
 # drops, processAllAvailable barrier), so one run per Spark app is the
 # whole truth — re-running it for every register_views/queries() call
@@ -88,26 +90,48 @@ STATE_PARTITIONS = 2
 # until atexit (a frame built before the boundary keeps reading its
 # dir safely; a rebuild gets a fresh dir).
 _REPLAY_CACHE: dict[tuple, str] = {}
+_WIRE_CACHE: dict[tuple, str] = {}
 _REPLAY_BASES: list[str] = []
 # Serializes the miss path (r11 ADVICE): two threads building a1s
 # concurrently — or one building while release_caches() clears the
 # memo — must not both miss and pay the multi-second replay twice.
 _REPLAY_LOCK = threading.Lock()
 
-from trace_data_pipeline_spark.operators.caching import (  # noqa: E402
-    register_release_hook,
-)
 
-def _clear_replay_cache() -> None:
+def _clear_memos() -> None:
     # under the lock: a replay in flight at the query boundary would
     # otherwise re-insert its memo entry AFTER the clear, quietly
     # surviving the boundary (round-12 review) — serialized with the
     # miss path, the clear lands strictly before or after a build
     with _REPLAY_LOCK:
         _REPLAY_CACHE.clear()
+        _WIRE_CACHE.clear()
 
 
-register_release_hook(_clear_replay_cache)
+register_release_hook(_clear_memos)
+
+
+def _memoized(cache: dict, run, spark, sf_dir: str):
+    """Read the output dir of `run(spark, sf_dir)`, running it at most
+    once per (application, sf_dir, events fingerprint). The fingerprint
+    makes a REWRITTEN sf_dir within one session miss instead of serving
+    the previous contents' output (r11 ADVICE). The miss path is
+    double-checked under the module lock so concurrent builders pay
+    the replay once."""
+    sf_abs = os.path.abspath(sf_dir)
+    key = (
+        spark.sparkContext.applicationId,
+        sf_abs,
+        table_fingerprint(os.path.join(sf_abs, "events.parquet")),
+    )
+    out = cache.get(key)
+    if out is None or not os.path.isdir(out):
+        with _REPLAY_LOCK:
+            out = cache.get(key)
+            if out is None or not os.path.isdir(out):
+                out = run(spark, sf_dir)
+                cache[key] = out
+    return spark.read.parquet(out)
 
 
 @atexit.register
@@ -175,6 +199,62 @@ def _stage_drops(staged, n_drops: int, src: str) -> list[str]:
     return part_files
 
 
+def _time_slices(ev, n_drops: int):
+    """(drop index column, observed span) for routing `ev` rows into
+    `n_drops` equal time slices of its ts span (one tiny agg; the
+    events table is the smallest fact). Chunking by TIME is what makes
+    the watermark sound: each drop's earliest event is later than
+    everything already processed."""
+    span = ev.agg(
+        F.min("ts").alias("lo"), F.max("ts").alias("hi")
+    ).collect()[0]
+    lo, hi = span["lo"], span["hi"]
+    step = (hi - lo) / n_drops
+    drop_ix = F.lit(n_drops - 1)
+    for i in range(n_drops - 2, -1, -1):
+        drop_ix = F.when(
+            F.col("ts") < F.lit(lo + step * (i + 1)), F.lit(i)
+        ).otherwise(drop_ix)
+    return drop_ix, hi - lo
+
+
+def _replay_dirs(prefix: str) -> tuple[str, str, str]:
+    """Fresh (drops, out, ckpt) dirs under one base registered for
+    atexit removal; the drops dir exists."""
+    base = tempfile.mkdtemp(prefix=prefix)
+    _REPLAY_BASES.append(base)
+    src = os.path.join(base, "drops")
+    os.makedirs(src)
+    return src, os.path.join(base, "out"), os.path.join(base, "ckpt")
+
+
+def _state_session(spark):
+    """A CLONED session (same SparkContext, own SQLConf) to plan the
+    stream in, so pinning STATE_PARTITIONS (see its comment for the
+    measurements) can't bleed into queries planned concurrently in the
+    caller's session (r10 ADVICE); the count is burned into the
+    checkpoint at first batch."""
+    ss = spark.newSession()
+    conf_key = "spark.sql.shuffle.partitions"
+    ss.conf.set(
+        conf_key, str(min(int(ss.conf.get(conf_key)), STATE_PARTITIONS))
+    )
+    return ss
+
+
+def _drain(q, src: str, ckpt: str) -> None:
+    """Run the query over every staged drop, stop it, and delete the
+    drops and the checkpoint: they are dead weight once the output dir
+    holds everything. The output dir outlives the builder (the returned
+    frame reads it lazily) and is reaped by the atexit hook above."""
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    shutil.rmtree(src, ignore_errors=True)
+    shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def _run_replay(spark, sf_dir: str) -> str:
     """Execute the chronological drop replay once; return the staging
     dir holding every (window, user) update emission, stamped with
@@ -185,23 +265,8 @@ def _run_replay(spark, sf_dir: str) -> str:
     )
 
     ev = load_table(spark, sf_dir, "events").select("ts", "user_id", "value")
-
-    # drop boundaries: split the observed span into N equal intervals
-    # (one tiny agg; the events table is the smallest fact). Chunking by
-    # TIME is what makes the watermark sound: each drop's earliest event
-    # is later than everything already processed.
-    span = ev.agg(
-        F.min("ts").alias("lo"), F.max("ts").alias("hi")
-    ).collect()[0]
-    lo, hi = span["lo"], span["hi"]
-    step = (hi - lo) / N_DROPS
-
-    base = tempfile.mkdtemp(prefix="a1s_replay_")
-    _REPLAY_BASES.append(base)
-    src = os.path.join(base, "drops")
-    upd = os.path.join(base, "updates")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src, exist_ok=True)
+    drop_ix, _ = _time_slices(ev, N_DROPS)
+    src, upd, ckpt = _replay_dirs("a1s_replay_")
 
     # pre-write the four time-slice drops as single files with strictly
     # ascending mtimes: the file source (latestFirst=false) takes files
@@ -211,26 +276,11 @@ def _run_replay(spark, sf_dir: str) -> str:
     # quarter of the per-barrier streaming overhead. r16: all drops
     # stage in ONE pass over the events scan (same slice boundaries as
     # the old per-drop filters) instead of one filtered write job each.
-    drop_ix = F.lit(N_DROPS - 1)
-    for i in range(N_DROPS - 2, -1, -1):
-        drop_ix = F.when(
-            F.col("ts") < F.lit(lo + step * (i + 1)), F.lit(i)
-        ).otherwise(drop_ix)
     _stage_drops(ev.withColumn("__drop", drop_ix), N_DROPS, src)
 
-    # Plan the stream in a CLONED session (same SparkContext, own
-    # SQLConf) so pinning STATE_PARTITIONS (see its comment for the
-    # measurements) can't bleed into queries planned concurrently in
-    # the caller's session (r10 ADVICE); the count is burned into the
-    # checkpoint at first batch.
-    ss = spark.newSession()
-    conf_key = "spark.sql.shuffle.partitions"
-    ss.conf.set(
-        conf_key, str(min(int(ss.conf.get(conf_key)), STATE_PARTITIONS))
-    )
-
     stream = stream_events_from_dir(
-        ss, os.path.join(src, "*"), ev.schema, max_files_per_trigger=1
+        _state_session(spark), os.path.join(src, "*"), ev.schema,
+        max_files_per_trigger=1,
     )
     panel = daily_event_panel(
         stream, id_col="user_id", value_col="value", watermark="2 hours"
@@ -260,43 +310,8 @@ def _run_replay(spark, sf_dir: str) -> str:
         .option("checkpointLocation", ckpt)
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # the replay inputs and checkpoint are dead weight once the staging
-    # parquet holds every emission; the staging dir outlives this
-    # builder (the returned frame reads it lazily) and is reaped by the
-    # atexit hook above
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    _drain(q, src, ckpt)
     return upd
-
-
-def _input_fingerprint(sf_dir: str) -> tuple:
-    """Stat fingerprint of the replay's input (the events table): the
-    sorted per-file (relative name, size, mtime_ns) tuples. Folded into
-    the memo key so a REWRITTEN sf_dir within one session misses
-    instead of serving the previous contents' emissions (r11 ADVICE).
-    Per-file rather than aggregated (count + max mtime + total bytes):
-    aggregates collide on renames and on swaps that conserve totals
-    (round-12 review). The make-style limit remains: a rewrite that
-    preserves every name, size AND mtime (cp -p of equal-length
-    content) is indistinguishable without hashing bytes."""
-    path = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    stats = []
-    if os.path.isdir(path):
-        for root, _, files in os.walk(path):
-            for fn in files:
-                p = os.path.join(root, fn)
-                st = os.stat(p)
-                stats.append(
-                    (os.path.relpath(p, path), st.st_size, st.st_mtime_ns)
-                )
-    elif os.path.exists(path):
-        st = os.stat(path)
-        stats.append((os.path.basename(path), st.st_size, st.st_mtime_ns))
-    return tuple(sorted(stats))
 
 
 def replay_daily_panel(spark, sf_dir):
@@ -305,21 +320,8 @@ def replay_daily_panel(spark, sf_dir):
     at most once per (application, sf_dir, input fingerprint). The
     catalog builder reduces this to the final panel; tests read the
     stamps to prove the replay really produced N_DROPS cross-merging
-    micro-batches. The miss path is double-checked under a module lock
-    so concurrent builders pay the replay once."""
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        _input_fingerprint(sf_dir),
-    )
-    upd = _REPLAY_CACHE.get(key)
-    if upd is None or not os.path.isdir(upd):
-        with _REPLAY_LOCK:
-            upd = _REPLAY_CACHE.get(key)
-            if upd is None or not os.path.isdir(upd):
-                upd = _run_replay(spark, sf_dir)
-                _REPLAY_CACHE[key] = upd
-    return spark.read.parquet(upd)
+    micro-batches."""
+    return _memoized(_REPLAY_CACHE, _run_replay, spark, sf_dir)
 
 
 @register("a1s_streaming_daily_panel", oracle=_A1S_ORACLE)
@@ -355,15 +357,6 @@ SELECT event_id, ts, user_id, event_type, value, props FROM events
 """
 
 N_WIRE_DROPS = 3
-_WIRE_CACHE: dict[tuple, str] = {}
-
-
-def _clear_wire_cache() -> None:
-    with _REPLAY_LOCK:
-        _WIRE_CACHE.clear()
-
-
-register_release_hook(_clear_wire_cache)
 
 
 def _run_wire_replay(spark, sf_dir: str) -> str:
@@ -397,19 +390,9 @@ def _run_wire_replay(spark, sf_dir: str) -> str:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
-    span = ev.agg(
-        F.min("ts").alias("lo"), F.max("ts").alias("hi")
-    ).collect()[0]
-    lo, hi = span["lo"], span["hi"]
-    step = (hi - lo) / N_WIRE_DROPS
-    horizon = f"{(hi - lo).days + 2} days"
-
-    base = tempfile.mkdtemp(prefix="s5_wire_")
-    _REPLAY_BASES.append(base)
-    src = os.path.join(base, "drops")
-    out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src, exist_ok=True)
+    drop_ix, span = _time_slices(ev, N_WIRE_DROPS)
+    horizon = f"{span.days + 2} days"
+    src, out, ckpt = _replay_dirs("s5_wire_")
 
     # r16 one-pass staging: the old loop paid one filtered scan +
     # encode + write job PER drop (plus re-encoding the redelivered
@@ -417,11 +400,6 @@ def _run_wire_replay(spark, sf_dir: str) -> str:
     # to its time-slice drop — redelivered rows (event_id % 7 == 0,
     # producer-retry semantics) explode into (drop, drop+1) with the
     # SAME wire bytes — and write all drops in one partitioned job.
-    drop_ix = F.lit(N_WIRE_DROPS - 1)
-    for i in range(N_WIRE_DROPS - 2, -1, -1):
-        drop_ix = F.when(
-            F.col("ts") < F.lit(lo + step * (i + 1)), F.lit(i)
-        ).otherwise(drop_ix)
     wire = ev.select(
         json_event_value(ev).alias("value"),
         drop_ix.alias("__d"),
@@ -438,13 +416,9 @@ def _run_wire_replay(spark, sf_dir: str) -> str:
     )
     _stage_drops(staged, N_WIRE_DROPS, src)
 
-    ss = spark.newSession()
-    conf_key = "spark.sql.shuffle.partitions"
-    ss.conf.set(
-        conf_key, str(min(int(ss.conf.get(conf_key)), STATE_PARTITIONS))
-    )
     raw = stream_events_from_dir(
-        ss, os.path.join(src, "*"), "value binary", max_files_per_trigger=1
+        _state_session(spark), os.path.join(src, "*"), "value binary",
+        max_files_per_trigger=1,
     )
     deduped = streaming_exact_dedup(
         decode_json_events(raw), id_cols=("event_id",), ts_col="ts",
@@ -458,32 +432,15 @@ def _run_wire_replay(spark, sf_dir: str) -> str:
         .option("checkpointLocation", ckpt)
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    _drain(q, src, ckpt)
     return out
 
 
 def replay_wire_ingest(spark, sf_dir):
-    """Memoized like replay_daily_panel: once per (application,
-    sf_dir, input fingerprint); the release_caches() hook drops the
-    memo at query boundaries so bench re-measures the replay."""
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        _input_fingerprint(sf_dir),
-    )
-    out = _WIRE_CACHE.get(key)
-    if out is None or not os.path.isdir(out):
-        with _REPLAY_LOCK:
-            out = _WIRE_CACHE.get(key)
-            if out is None or not os.path.isdir(out):
-                out = _run_wire_replay(spark, sf_dir)
-                _WIRE_CACHE[key] = out
-    return spark.read.parquet(out)
+    """Memoized like replay_daily_panel; the release_caches() hook
+    drops the memo at query boundaries so bench re-measures the
+    replay."""
+    return _memoized(_WIRE_CACHE, _run_wire_replay, spark, sf_dir)
 
 
 @register("s5_wire_ingest_dedup", oracle=_S5_ORACLE)
@@ -493,10 +450,9 @@ def s5_wire_ingest_dedup(spark, sf_dir):
     trap this entry caught) → dropDuplicatesWithinWatermark over the
     redelivered stream → append sink. Output must hash-match the
     plain events table: every redelivery suppressed, every first
-    delivery intact to the microsecond. The Kafka source itself is
-    config-only (`streaming/kafka.py::kafka_json_stream`) — the
-    decode and dedup proven here are byte-identical through a broker;
-    only the transport differs."""
+    delivery intact to the microsecond. A real Kafka source needs only
+    the connector package: the decode and dedup proven here are
+    byte-identical through a broker; only the transport differs."""
     emitted = replay_wire_ingest(spark, sf_dir)
     return emitted.select(
         "event_id", "ts", "user_id", "event_type", "value", "props"

@@ -9,6 +9,7 @@ them into the parquet scan (the reference embeds them in SQL text —
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -120,15 +121,29 @@ def load_jdbc_table(
     raise AssertionError("unreachable")  # loop always returns or raises
 
 
-def _table_stat(path: str) -> tuple:
-    """Cheap freshness token for the cache below: (mtime_ns, size) of
-    the parquet file, or of the directory entry for multi-file tables
-    (adding/removing part files touches the directory's mtime)."""
+def table_fingerprint(path: str) -> tuple:
+    """Freshness token for a parquet table: the sorted per-file
+    (relative name, size, mtime_ns) tuples, or () if the path is
+    missing. Per file, because rewriting a part file inside a directory
+    table changes neither the directory's mtime nor its size; and not
+    aggregated (count + max mtime + total bytes), because aggregates
+    collide on renames and on swaps that conserve totals. The
+    make-style limit remains: a rewrite that preserves every name, size
+    AND mtime (cp -p of equal-length content) is indistinguishable
+    without hashing bytes."""
     try:
         st = os.stat(path)
-        return (st.st_mtime_ns, st.st_size)
     except OSError:
         return ()
+    if not stat.S_ISDIR(st.st_mode):
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    stats = []
+    for root, _, files in os.walk(path):
+        for fn in files:
+            p = os.path.join(root, fn)
+            st = os.stat(p)
+            stats.append((os.path.relpath(p, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(stats))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -148,14 +163,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # never data — execution always re-reads the files, so bench/oracle
     # runs still compute everything from the parquet inputs. Keyed ON
     # the session object (cloned sessions must not share frames; the
-    # cache dies with the session) and invalidated by the file's
-    # (mtime, size).
+    # cache dies with the session) and invalidated by the table's
+    # per-file fingerprint.
     path = os.path.join(sf_dir, f"{name}.parquet")
     cache = getattr(spark, "_tds_table_cache", None)
     if cache is None:
         cache = {}
         spark._tds_table_cache = cache
-    key = (os.path.abspath(path), name, _table_stat(path))
+    key = (os.path.abspath(path), name, table_fingerprint(path))
     hit = cache.get(key)
     if hit is not None:
         return hit

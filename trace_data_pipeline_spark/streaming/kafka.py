@@ -1,18 +1,17 @@
-"""Kafka transport for the streaming surface — config-only wiring.
+"""Kafka wire format for the streaming surface.
 
 A Kafka-fed trade tape is the production shape of the reference's
-incremental chunk ingestion (SURVEY.md §2.8 extension). The transport
-layer is pure configuration (`readStream.format("kafka")`); everything
-testable — the wire-format decode and the downstream plan — is shared
-with any other source, so the decode is factored out and proven on
-batch/file frames while the Kafka hookup itself needs only the
-`spark-sql-kafka` connector package on the cluster classpath (not
-shipped in this container).
+incremental chunk ingestion (SURVEY.md §2.8 extension). A Kafka source
+yields a binary `value` column per message; the encode and decode of
+that column are the only transport-specific parts of the plan, so they
+live here and run on any source — the s5 entry streams them from file
+drops. Reading a real topic needs the `spark-sql-kafka` connector
+package, which this repo does not ship.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # the events-table wire format (JSON per message value)
@@ -55,34 +54,3 @@ def decode_json_events(raw: DataFrame, schema: str = EVENTS_WIRE_SCHEMA) -> Data
         )
     ).select("j.*")
 
-
-def kafka_json_stream(
-    spark: SparkSession,
-    topic: str,
-    bootstrap_servers: str,
-    schema: str = EVENTS_WIRE_SCHEMA,
-    starting_offsets: str = "earliest",
-    max_offsets_per_trigger: int | None = None,
-) -> DataFrame:
-    """readStream from a Kafka topic of JSON events → typed rows.
-
-    Requires the `org.apache.spark:spark-sql-kafka-0-10` package on the
-    classpath; raises a clear error when the connector is absent so
-    callers can fall back to a file source. `maxOffsetsPerTrigger`
-    bounds micro-batch size (the backpressure knob at scale)."""
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-    )
-    if max_offsets_per_trigger is not None:
-        reader = reader.option("maxOffsetsPerTrigger", max_offsets_per_trigger)
-    try:
-        raw = reader.load()
-    except Exception as e:  # connector jar not on classpath
-        raise RuntimeError(
-            "Kafka source unavailable — add the spark-sql-kafka connector "
-            "package to the cluster classpath (not shipped here)"
-        ) from e
-    return decode_json_events(raw, schema)
